@@ -16,13 +16,18 @@ Reference behavior being reproduced (SURVEY.md §1):
 - reference PANICS on a short row or non-string first cell
   (src/main.rs:69-75); we default to PERMISSIVE (per-row repair) with a
   FAILFAST option, mirroring Spark reader mode semantics
+
+This module owns the schema and the per-row coercion (`coerce_row`);
+the sheet itself is parsed and coerced in one place, the ``xlsx`` data
+source's reader (sources/datasource.py), which `load_excel_table` runs
+on the driver for its one sheet.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass
-from typing import Any, Iterable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,8 +63,6 @@ class DuplicateKeyError(ValueError):
 class IngestOptions:
     mode: str = "PERMISSIVE"          # or "FAILFAST" (reference panics)
     null_preserving: bool = False     # True = serde-path semantics (NULLs)
-    enforce_unique: bool = True
-    skip_header: bool = True
 
 
 def _coerce_f64(v: Any) -> float | None:
@@ -112,21 +115,6 @@ def coerce_row(cells: list[Any], opts: IngestOptions) -> tuple | None:
     return (name, avg, cnt, mx, mn)
 
 
-def rows_to_dataframe(spark: SparkSession, sheet_rows: Iterable[list[Any]],
-                      opts: IngestOptions | None = None) -> DataFrame:
-    opts = opts or IngestOptions()
-    it = iter(sheet_rows)
-    if opts.skip_header:
-        next(it, None)
-    data = [r for r in (coerce_row(row, opts) for row in it) if r is not None]
-    schema = EXCEL_ROWS_SCHEMA_NULLABLE if opts.null_preserving else EXCEL_ROWS_SCHEMA
-    # Arrow-batched driver->JVM transfer; the distributed analogue of the
-    # reference's FFI hop into SQLite. For sheets too big for the driver,
-    # use sources.datasource.XlsxDataSource (partitioned reads) or stage
-    # to parquet first.
-    return spark.createDataFrame(data, schema)
-
-
 def check_unique_key(df: DataFrame, key: str = "service_name") -> None:
     dupes = (df.groupBy(key).count().filter(F.col("count") > 1).limit(20).collect())
     if dupes:
@@ -137,18 +125,28 @@ def check_unique_key(df: DataFrame, key: str = "service_name") -> None:
 def load_excel_table(spark: SparkSession, path: str, sheet: str | None = None,
                      view_name: str = "excel_rows",
                      opts: IngestOptions | None = None) -> DataFrame:
-    """Full ingest pipeline: parse -> coerce -> DataFrame -> uniqueness
-    check -> temp view (+cache, mirroring the in-memory SQLite db).
+    """Full ingest pipeline: the ``xlsx`` data source's reader parses and
+    coerces the sheet -> DataFrame -> cache (mirroring the in-memory
+    SQLite db) -> uniqueness check -> temp view.
 
     This is the reference-semantics path (fixed positional 5-column
     schema, header names ignored). For arbitrary sheets, the optional
     inference path is :func:`load_excel_table_inferred` — kept separate
     and OFF by default so reference parity stays byte-exact."""
+    from .sources.datasource import SheetPartition, XlsxReader  # imports this module
+
     opts = opts or IngestOptions()
-    df = rows_to_dataframe(spark, iter_xlsx_rows(path, sheet), opts)
-    df = df.cache()
-    if opts.enforce_unique:
-        check_unique_key(df)
+    # The one sheet is read on the driver by the reader the data source
+    # runs on executors; a data source scan would start its Python
+    # planner and a Python worker before the prompt, for one partition.
+    # ``sheet=None`` is the first sheet, and a wrong name raises the
+    # KeyError listing the sheets before any Spark job starts.
+    reader = XlsxReader({"path": path, "mode": opts.mode,
+                         "null_preserving": str(opts.null_preserving)})
+    rows = list(reader.read(SheetPartition(path, sheet)))
+    schema = EXCEL_ROWS_SCHEMA_NULLABLE if opts.null_preserving else EXCEL_ROWS_SCHEMA
+    df = spark.createDataFrame(rows, schema).cache()
+    check_unique_key(df)
     df.createOrReplaceTempView(view_name)
     return df
 

@@ -317,64 +317,6 @@ def py_norm_tokens(text: str) -> set:
     return set(text.split(" "))
 
 
-def minhash_signatures_arrow(df: DataFrame, n_hashes: int = 128,
-                             text_col: str = "text", id_col: str = "doc_id",
-                             py_keyset=py_shingles) -> DataFrame:
-    """MinHash signatures as ONE Arrow-vectorized mapInPandas pass —
-    zero shuffle (vs. the explode+groupBy shuffle of
-    :func:`minhash_signatures`) and a constant-size plan (vs. 128
-    unrolled min-agg expressions whose Catalyst analysis + Janino
-    compile alone cost seconds per fresh plan: measured 10.1s -> 5.7s
-    single-shot, 5.3s -> 2.0s steady at sf0.1/local[32]).
-
-    The base hash is crc32 (any 32-bit base works: the universal family
-    (uh_a(i)*h + uh_c(i)) mod 2^32 on top provides the n_hashes
-    independent permutations, and downstream candidates are verified
-    with EXACT Jaccard, so the choice of base never reaches the output
-    contract). Docs with an empty keyset produce no row, matching the
-    explode-based path. At 100 TB this is the production shape:
-    signatures are computed where the documents already live, and the
-    only shuffle in the whole dedup is the tiny banded-bucket exchange."""
-    import numpy as np
-    import pandas as pd
-    import zlib
-
-    A = np.array([uh_a(i) for i in range(n_hashes)], dtype=np.uint64)[:, None]
-    C = np.array([uh_c(i) for i in range(n_hashes)], dtype=np.uint64)[:, None]
-    M = np.uint64((1 << 32) - 1)
-
-    def kernel(batches):
-        for pdf in batches:
-            dids, sigs = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                # NULL/NaN text: drop the row, matching the SQL engine
-                # (split(NULL) -> NULL -> explode emits nothing) — the
-                # kernel must not crash where engine="sql" succeeds
-                if text is None or (isinstance(text, float)):
-                    continue
-                keys = py_keyset(text)
-                if not keys:
-                    continue
-                hb = np.fromiter((zlib.crc32(s.encode()) for s in keys),
-                                 dtype=np.uint64, count=len(keys))[None, :]
-                sig = ((A * hb + C) & M).min(axis=1)
-                dids.append(did)
-                sigs.append(sig.astype("int64").tolist())
-            # explicit object dtype: an ALL-dropped batch would default
-            # the empty sig column to float64, which Arrow cannot cast
-            # to list<int64> (ArrowNotImplementedError)
-            yield pd.DataFrame({"did": pd.array(dids, dtype="Int64"),
-                                "sig": pd.Series(sigs, dtype="object")})
-
-    # fan_out before the kernel (r11): mapInPandas inherits its input's
-    # partitioning, so on a narrow local scan the ENTIRE Python
-    # signature pass ran in 1-2 Arrow tasks. "Zero shuffle" above
-    # refers to the cluster-scale plan, where the gated fan_out is a
-    # structural no-op.
-    return (fan_out(df.select(id_col, text_col))
-            .mapInPandas(kernel, "did bigint, sig array<bigint>"))
-
-
 def minhash_banded_arrow(df: DataFrame, n_hashes: int, bands: int,
                          rows: int, text_col: str = "text",
                          id_col: str = "doc_id",
@@ -389,6 +331,10 @@ def minhash_banded_arrow(df: DataFrame, n_hashes: int, bands: int,
     exact-Jaccard verification erases the difference — so the kernel
     folds each slice with a polynomial hash in NumPy and emits 4x fewer
     bytes with zero post-kernel HOF work."""
+    if n_hashes != bands * rows:
+        raise ValueError(
+            f"minhash_banded_arrow needs n_hashes == bands * rows; got "
+            f"n_hashes={n_hashes}, bands={bands}, rows={rows}")
     import numpy as np
     import pandas as pd
     import zlib
@@ -430,30 +376,6 @@ def minhash_banded_arrow(df: DataFrame, n_hashes: int, bands: int,
 
     return (fan_out(df.select(id_col, text_col))
             .mapInPandas(kernel, "did bigint, band int, bucket bigint"))
-
-
-def lsh_pairs_grouped(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
-    """LSH banding WITHOUT a self-join: explode band buckets (HOF
-    transform — constant-size plan), group by (band, bucket), and emit
-    the pairs inside each bucket from the collected doc list. The
-    signature pipeline is traversed ONCE (the self-join formulation in
-    :func:`minhash_lsh_candidates` computes it twice when exchange
-    reuse doesn't fire, which AQE does not guarantee). Bucket sizes are
-    O(dup-cluster size), so the per-bucket pair explosion is the same
-    O(n·dups) candidate volume as the join formulation."""
-    banded = sigs.select("did", F.explode(F.expr(
-        f"transform(sequence(0, {bands - 1}), b -> struct(b AS band, "
-        f"xxhash64(array_join(transform(slice(sig, b*{rows}+1, {rows}), "
-        f"x -> cast(x AS string)), ',')) AS bucket))")).alias("bb"))
-    banded = banded.select("did", "bb.band", "bb.bucket")
-    grp = (banded.groupBy("band", "bucket")
-           .agg(F.sort_array(F.collect_list("did")).alias("dids"))
-           .filter(F.size("dids") >= 2))
-    return (grp.select(F.explode(F.expr(
-        "flatten(transform(sequence(0, size(dids)-2), i -> "
-        "transform(slice(dids, i+2, size(dids)-i-1), y -> "
-        "struct(dids[i] AS d1, y AS d2))))")).alias("p"))
-        .select("p.d1", "p.d2").distinct())
 
 
 def minhash_dedup_pairs(df: DataFrame, threshold: float, n_hashes: int = 64,

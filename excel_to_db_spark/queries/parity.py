@@ -24,7 +24,10 @@ from ..sinks.display import collect_formatted
 from ..numerics import cents_sum as _cents_sum
 from .registry import query
 
-DEMO_XLSX = "/root/reference/demo.xlsx"
+# The paper's demo workbook, rebuilt with sources/xlsx_writer.write_xlsx
+# (tests/test_demo_fixture.py holds its cells and checks the rebuild).
+DEMO_XLSX = os.path.join(os.path.dirname(os.path.dirname(__file__)),
+                         "data", "demo.xlsx")
 
 
 @query("excel_scan", oracle="""

@@ -21,6 +21,7 @@ from __future__ import annotations
 import argparse
 import sys
 import time
+from itertools import chain, islice
 
 from pyspark.sql import SparkSession
 
@@ -88,10 +89,16 @@ def run_line(spark: SparkSession, line: str, *, sqlite_compat: bool = False,
         print(f"-- {time.perf_counter() - t0:.3f}s")
         return
     df = spark.sql(rewritten)
-    show(df, row_cap=row_cap)
     if out_path:
-        export_csv(df, out_path)
+        # One execution: the display takes the head of the row stream
+        # and the CSV file all of it; only that head is held.
+        it = df.toLocalIterator()
+        head = list(islice(it, row_cap + 1))
+        show(df, row_cap=row_cap, rows=head)
+        export_csv(df, out_path, rows=chain(head, it))
         print(f"-- exported to {out_path}")
+    else:
+        show(df, row_cap=row_cap)
     # Timing log, as the reference's `Query and Display Elapsed`
     # (src/main.rs:292-293).
     print(f"-- {time.perf_counter() - t0:.3f}s")

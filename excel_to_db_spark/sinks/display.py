@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from decimal import Decimal
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
 DEFAULT_ROW_CAP = 1000
 
@@ -47,19 +47,24 @@ def render_table(header: list[str], rows: list[list[str]]) -> str:
     return "\n".join(out)
 
 
-def collect_formatted(df: DataFrame, row_cap: int = DEFAULT_ROW_CAP
+def collect_formatted(df: DataFrame, row_cap: int = DEFAULT_ROW_CAP,
+                      rows: list[Row] | None = None
                       ) -> tuple[list[str], list[list[str]], bool]:
-    """Returns (header, formatted rows, truncated?)."""
+    """Returns (header, formatted rows, truncated?). ``rows`` is the
+    first ``row_cap + 1`` rows of df's result when the caller already
+    streams it (the REPL's ``|out=`` line). Without it, df runs with
+    that limit."""
     header = list(df.columns)
-    raw = df.limit(row_cap + 1).collect()
+    raw = df.limit(row_cap + 1).collect() if rows is None else rows
     truncated = len(raw) > row_cap
-    rows = [[format_cell(v) for v in r] for r in raw[:row_cap]]
-    return header, rows, truncated
+    cells = [[format_cell(v) for v in r] for r in raw[:row_cap]]
+    return header, cells, truncated
 
 
-def show(df: DataFrame, row_cap: int = DEFAULT_ROW_CAP) -> str:
-    header, rows, truncated = collect_formatted(df, row_cap)
-    text = render_table(header, rows)
+def show(df: DataFrame, row_cap: int = DEFAULT_ROW_CAP,
+         rows: list[Row] | None = None) -> str:
+    header, cells, truncated = collect_formatted(df, row_cap, rows)
+    text = render_table(header, cells)
     if truncated:
         text += f"\n-- output capped at {row_cap} rows --"
     print(text)

@@ -2,12 +2,14 @@
 partitioned Excel ingestion.
 
 The reference parses one sheet single-threaded in the driver process
-(reference src/main.rs:49-85). The v1 rebuild path (ingest.load_excel_table)
-keeps that driver-side shape; this DataSource is the scale path: each
-(file, sheet) pair becomes an input partition, so a directory of
-workbooks (the realistic "100 GB of Excel" situation — xlsx files are
-individually small, there are just many of them) parses in parallel on
-executors, feeding Arrow batches straight into the plan. For a single
+(reference src/main.rs:49-85). `XlsxReader.read` is the one place a
+sheet is parsed and coerced: `ingest.load_excel_table` runs it on the
+driver for its one sheet, and this DataSource runs it on executors as
+the scale path. Each (file, sheet) pair becomes an input partition, so
+a directory of workbooks (the realistic "100 GB of Excel" situation —
+xlsx files are individually small, there are just many of them) parses
+in parallel on executors, feeding Arrow batches straight into the
+plan. For a single
 giant sheet, pre-convert to Parquet (xlsx XML is inherently sequential —
 a row-range split would still decompress the whole stream per split).
 
@@ -88,7 +90,6 @@ class XlsxReader(DataSourceReader):
             mode=options.get("mode", "PERMISSIVE").upper(),
             null_preserving=str(options.get("null_preserving", "false")).lower()
             == "true",
-            enforce_unique=False,  # cross-partition constraint; check post-load
         )
 
     def partitions(self) -> list[SheetPartition]:

@@ -14,10 +14,11 @@ def register(spark):
 
 def test_reads_demo_like_driver_path(spark):
     from excel_to_db_spark.ingest import load_excel_table
+    from excel_to_db_spark.queries.parity import DEMO_XLSX
 
     via_ds = (spark.read.format("xlsx")
-              .option("path", "/root/reference/demo.xlsx").load())
-    via_driver = load_excel_table(spark, "/root/reference/demo.xlsx")
+              .option("path", DEMO_XLSX).load())
+    via_driver = load_excel_table(spark, DEMO_XLSX)
     assert sorted(map(tuple, via_ds.collect())) == \
         sorted(map(tuple, via_driver.collect()))
 

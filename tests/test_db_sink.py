@@ -7,9 +7,8 @@ import sqlite3
 import pytest
 
 from excel_to_db_spark.ingest import load_excel_table
+from excel_to_db_spark.queries.parity import DEMO_XLSX as DEMO
 from excel_to_db_spark.sinks.db import write_sqlite
-
-DEMO = "/root/reference/demo.xlsx"
 
 
 def test_write_sqlite_golden(spark, tmp_path):

@@ -114,6 +114,14 @@ def test_minhash_arrow_kernel_drops_null_text_like_sql(spark):
            {(r[0], r[1]) for r in pairs_sql} == {(1, 3)}
 
 
+def test_minhash_banded_arrow_rejects_bad_banding(docs):
+    """n_hashes must split into bands x rows; the kernel says so at
+    entry instead of failing later in a NumPy reshape."""
+    with pytest.raises(ValueError,
+                       match="n_hashes=100, bands=16, rows=6"):
+        D.minhash_banded_arrow(docs, n_hashes=100, bands=16, rows=6)
+
+
 def test_prefix_filter_equals_full_join(spark, sf_dir):
     """Forced-path equivalence (the r10 _lof_top3 pattern): the
     positional-prefix candidate path must produce BIT-IDENTICAL

@@ -10,12 +10,10 @@ from excel_to_db_spark.ingest import (
     IngestOptions,
     coerce_row,
     load_excel_table,
-    rows_to_dataframe,
 )
+from excel_to_db_spark.queries.parity import DEMO_XLSX as DEMO
 from excel_to_db_spark.sources.xlsx import read_xlsx_rows, sheet_names
 from excel_to_db_spark.sources.xlsx_writer import write_xlsx
-
-DEMO = "/root/reference/demo.xlsx"
 
 
 def test_demo_sheet_names():
@@ -90,11 +88,68 @@ def test_roundtrip_own_writer(spark, tmp_path):
     assert df.count() == 50
 
 
-def test_rows_to_dataframe_schema(spark):
-    df = rows_to_dataframe(spark, [["h"] * 5, ["a", "1", "2", "3", "4"]],
-                           IngestOptions())
-    assert [f.dataType.simpleString() for f in df.schema.fields] == \
-        ["string", "double", "bigint", "double", "double"]
+def test_load_schema(spark, tmp_path):
+    """Both excel_rows schemas: fixed types, numeric columns nullable
+    only in null_preserving mode; text in a REAL column is not a number
+    (0.0 or NULL) while the count column parses numeric text."""
+    p = str(tmp_path / "schema.xlsx")
+    write_xlsx(p, [["h"] * 5, ["a", "1", "2", "3", "4"]])
+    for null_preserving in (False, True):
+        df = load_excel_table(
+            spark, p, view_name="schema_rows",
+            opts=IngestOptions(null_preserving=null_preserving))
+        assert [f.dataType.simpleString() for f in df.schema.fields] == \
+            ["string", "double", "bigint", "double", "double"]
+        assert [f.nullable for f in df.schema.fields] == \
+            [False] + [null_preserving] * 4
+        miss = None if null_preserving else 0.0
+        assert [tuple(r) for r in df.collect()] == [("a", miss, 2, miss, miss)]
+    spark.catalog.dropTempView("schema_rows")
+
+
+def test_load_unknown_sheet_raises_before_any_job(spark):
+    sc = spark.sparkContext
+    sc.setJobGroup("unknown_sheet", "load with a wrong sheet name")
+    try:
+        with pytest.raises(KeyError, match="'Nope' not found; have \\['Sheet1'\\]"):
+            load_excel_table(spark, DEMO, "Nope")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("unknown_sheet")) == []
+
+
+def test_load_failfast_short_row(spark, tmp_path):
+    p = str(tmp_path / "short.xlsx")
+    write_xlsx(p, [["h"] * 5, ["a", 1, 2, 3, 4], ["svc_short", 1.5]])
+    with pytest.raises(Exception, match=r"short row \(2 cells\)"):
+        load_excel_table(spark, p, view_name="short_rows",
+                         opts=IngestOptions(mode="FAILFAST"))
+    # PERMISSIVE (the default) repairs the row with the 0/0.0 defaults
+    df = load_excel_table(spark, p, view_name="short_rows")
+    assert sorted(map(tuple, df.collect())) == [
+        ("a", 1.0, 2, 3.0, 4.0), ("svc_short", 1.5, 0, 0.0, 0.0)]
+    spark.catalog.dropTempView("short_rows")
+
+
+def test_reader_decodes_inline_strings(tmp_path):
+    """write_xlsx stores text as shared strings; other writers inline
+    it (t="inlineStr"), which the reader must decode too."""
+    import zipfile
+
+    p = str(tmp_path / "inline.xlsx")
+    write_xlsx(p, [[1]])
+    with zipfile.ZipFile(p) as zf:
+        parts = {n: zf.read(n) for n in zf.namelist()}
+    parts["xl/worksheets/sheet1.xml"] = (
+        b'<worksheet xmlns="http://schemas.openxmlformats.org/'
+        b'spreadsheetml/2006/main"><sheetData><row r="1">'
+        b'<c r="A1" t="inlineStr"><is><t>svc</t></is></c>'
+        b'<c r="C1" t="inlineStr"><is><r><t>rich </t></r><r><t>text</t></r>'
+        b'</is></c></row></sheetData></worksheet>')
+    with zipfile.ZipFile(p, "w") as zf:
+        for name, data in parts.items():
+            zf.writestr(name, data)
+    assert read_xlsx_rows(p) == [["svc", None, "rich text"]]
 
 
 # ---------------------------------------------------------------------------

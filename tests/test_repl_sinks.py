@@ -127,3 +127,82 @@ def test_parse_out_suffix_backslash_escaped_quote():
     # trailing backslash at end-of-line must not crash the scanner
     sql, out = parse_out_suffix("SELECT '\\")
     assert out is None
+
+
+def _out_line_jobs(spark, line, row_cap):
+    """Run one REPL line in its own job group; return (stdout, job count)."""
+    import contextlib
+    import io
+
+    from excel_to_db_spark.repl import run_line
+
+    sc = spark.sparkContext
+    group = f"out_line_{id(line)}"
+    buf = io.StringIO()
+    sc.setJobGroup(group, line)
+    try:
+        with contextlib.redirect_stdout(buf):
+            run_line(spark, line, row_cap=row_cap)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return buf.getvalue(), len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_out_line_runs_query_once(spark, tmp_path):
+    """One partition, no shuffle: one execution of the query is one
+    job. Showing it and then exporting it separately took two."""
+    spark.range(0, 50, 1, 1).createOrReplaceTempView("once_v")
+    out = str(tmp_path / "once.csv")
+    _, jobs = _out_line_jobs(spark, f"SELECT id FROM once_v |out={out}", 100)
+    assert jobs == 1
+    spark.catalog.dropTempView("once_v")
+
+
+def test_out_line_caps_display_not_csv(spark, tmp_path):
+    spark.range(0, 1200, 1, 3).selectExpr("id", "id * 1000 AS big") \
+         .createOrReplaceTempView("cap_v")
+    out = str(tmp_path / "cap.csv")
+    text, _ = _out_line_jobs(
+        spark, f"SELECT id, big FROM cap_v ORDER BY id DESC |out={out}", 5)
+    data = [ln for ln in text.splitlines() if ln.startswith("| ")][1:]
+    assert [ln.split("|")[1].strip() for ln in data] == \
+        ["1,199", "1,198", "1,197", "1,196", "1,195"]
+    assert "-- output capped at 5 rows --" in text
+    with open(out, newline="") as fh:
+        lines = fh.read().splitlines()
+    assert lines[0] == "id,big"
+    assert lines[1:] == [f"{i},{i * 1000}" for i in range(1199, -1, -1)]
+    spark.catalog.dropTempView("cap_v")
+
+
+def test_out_line_holds_only_the_display_head(spark, tmp_path, monkeypatch):
+    """Rows already written to the CSV file are released: the line holds
+    the display head, not the whole result."""
+    import gc
+    import weakref
+
+    class R(list):  # a row that can be weakly referenced
+        pass
+
+    alive = []
+
+    def rows(self, prefetchPartitions=False):
+        refs = []
+        for i in range(1000):
+            r = R([i])
+            refs.append(weakref.ref(r))
+            yield r
+        del r
+        gc.collect()
+        alive.append(sum(ref() is not None for ref in refs))
+
+    df = spark.range(1)
+    df.createOrReplaceTempView("held_v")
+    monkeypatch.setattr(type(df), "toLocalIterator", rows)
+    out = str(tmp_path / "held.csv")
+    _out_line_jobs(spark, f"SELECT id FROM held_v |out={out}", 5)
+    # the 6-row head plus the row the CSV writer is on
+    assert alive == [7]
+    with open(out) as fh:
+        assert len(fh.read().splitlines()) == 1001
+    spark.catalog.dropTempView("held_v")
